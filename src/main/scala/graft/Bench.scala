@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * EXECUTION MODEL (round 17): the suite runs the registered queries
   * through a bounded FAIR-scheduled worker pool by default, declared
   * as `"parallel":N` in the artifact. Rationale, measured in round 16
-  * (`tools/ConstantProbe`): at sf0.1 every input is a 1–2-row-group
+  * (`tools/StageProbe`): at sf0.1 every input is a 1–2-row-group
   * parquet file, so a SERIAL pass provably idles ~30 of 32 cores while
   * paying ~0.4 s/query of scheduling floor — 272 queries × 0.4 s
   * ≈ 110 s that no per-query plan work can remove. The pool fills the
@@ -592,10 +592,9 @@ object Bench {
 
   private def run(realOut: java.io.PrintStream): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores: the target profile is local[32] on
-    // a 32-cpu box, and an unset env var must not quietly bench at 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
+    // optional allowlist, resolved before the session so an unknown
+    // name fails fast
+    val chosen = SparkEntry.selected()
     // pool width for the declared suite-concurrency mode; 1 = serial.
     // Default 8: the sf0.1 inputs are 1–2 parquet row groups, so a
     // single query schedules ≤2-task stages and leaves ~30 of 32 cores
@@ -604,32 +603,19 @@ object Bench {
     // depth of 8, the classic latency-hiding depth).
     val parallel = math.max(1,
       sys.env.get("SPARK_GRAFT_PARALLEL").map(_.toInt).getOrElse(8))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    // ad-hoc conf passthrough for profiling experiments, e.g.
+    // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;k=v" — never
+    // set by the driver, so the committed defaults are what every
+    // round artifact measures
+    val passthrough = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").map(_.trim).filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Session.local("graft-bench", Seq(
+      "spark.sql.adaptive.enabled" -> "true",
       // FAIR across per-thread pools: with FIFO (default), one query's
       // multi-hundred-task stage would head-of-line-block the other
       // workers' 2-task stages, serializing the pool right back
-      .config("spark.scheduler.mode", "FAIR")
-      // 38 queries × several codegen stages overflow the default
-      // 100-entry generated-class cache → janino recompiles on every
-      // run (x2 measured 2.4 s cold vs 0.7 s warm for 5000 rows)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf passthrough for profiling experiments, e.g.
-    // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;k=v" — never
-    // set by the driver, so the committed defaults above are what every
-    // round artifact measures
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";")
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.scheduler.mode" -> "FAIR") ++ passthrough: _*)
     // warmup: JIT/codegen/parquet-footer costs land here, not on the
     // alphabetically-first query
     spark.range(100000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
@@ -673,7 +659,7 @@ object Bench {
     // sized for ~0.2 s of real compute so the ~30 ms/job scheduling
     // floor doesn't dominate the ratio (the r13-era 50M/32-task probe
     // is ~1.5M rows/task — overhead-bound, hence its blindness).
-    val nCores = cpus.toInt
+    val nCores = Session.cpus
     val effRowsPerTask = 40000000L
     def effProbeOnce(parts: Int): Double = {
       val t0 = System.nanoTime()
@@ -742,15 +728,11 @@ object Bench {
     // oracle wall both ways and the stripped-both-sides pair is the
     // honest comparison. SPARK_GRAFT_BENCH_SORT=keep restores.
     val keepSort = sys.env.get("SPARK_GRAFT_BENCH_SORT").contains("keep")
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        if (keepSort) (name, fn)
-        else (name, (s: SparkSession, d: String) =>
-          org.apache.spark.sql.GraftSqlBridge.stripTerminalSort(fn(s, d)))
-      }
+    val selected = chosen.map { case (name, fn) =>
+      if (keepSort) (name, fn)
+      else (name, (s: SparkSession, d: String) =>
+        org.apache.spark.sql.GraftSqlBridge.stripTerminalSort(fn(s, d)))
+    }
 
     val warmErrors = new java.util.concurrent.atomic.AtomicInteger(0)
     // results in registry order regardless of execution order; the

@@ -22,4 +22,18 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The entries of [[queries]] named in `names` (comma-separated; the
+    * whole registry when unset), sorted by name. A name that is not
+    * registered throws IllegalArgumentException listing every such
+    * name, so a typo fails loudly instead of selecting nothing. */
+  def selected(names: Option[String] = sys.env.get("SPARK_GRAFT_QUERIES"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val only = names.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = only.getOrElse(Set.empty[String]).filterNot(all.contains)
+    require(unknown.isEmpty, "SPARK_GRAFT_QUERIES names unregistered " +
+      s"queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => only.forall(_.contains(n)) }.sortBy(_._1)
+  }
 }

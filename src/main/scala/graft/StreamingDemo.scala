@@ -6,7 +6,7 @@ import java.time.{Instant, LocalDate}
 import graft.queries.ReferencePipeline
 import graft.sinks.Report
 import graft.streaming.DetectionPipeline
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 /** End-to-end demonstration of the full daemon lifecycle (reference E1 →
@@ -21,14 +21,7 @@ import org.apache.spark.sql.functions._
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-streaming-demo")
     import spark.implicits._
 
     // E1: simulated prober events streamed into the fact store (file

@@ -162,7 +162,7 @@ object StratumRank {
     // partition, so the sort's sampled range boundaries pin exactly as
     // the old eager form pinned them — minus one whole materialization
     // job per call (this helper runs 1-2× inside a dozen registered
-    // queries; ConstantProbe measured x123 at 35 jobs/execution)
+    // queries; tools/StageProbe measured x123 at 35 jobs/execution)
     val sorted = base
       .sort(col("__sk") +: oCols.map(col(_).asc_nulls_last): _*)
       .withColumn("_pid", spark_partition_id())

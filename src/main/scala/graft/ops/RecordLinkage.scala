@@ -83,7 +83,7 @@ object RecordLinkage {
     // at least the record's own home copy).
     val blockCounts = probes.groupBy("nat", "band")
       .agg(count(lit(1)).as("__n"))
-    // PIN the pair-join width (round 18, ConstantProbe-measured: the
+    // PIN the pair-join width (round 18, tools/StageProbe-measured: the
     // whole query ran as 12 tasks at sf1 — AQE coalesces the tiny
     // probe shuffle to ~1 partition because it prices the join by its
     // INPUT bytes, but the join's OUTPUT is the maxBlock²-bounded pair

@@ -1990,7 +1990,7 @@ object ExtQueries {
   // stride is derived from the corpus size so the cell count stays ~40
   // at ANY scale factor — the doctrine the sf1 bench row demands (a
   // constant stride grows cells with N and assignment cost N²/stride;
-  // see Similarity.strideForCells and tools/ScaleProbe). Both engines
+  // see Similarity.strideForCells and COVERAGE.md). Both engines
   // compute the same integer stride: Spark via one count() job at plan
   // build, the oracle via a scalar subquery — so the query is
   // bit-identical across SFs BY CONSTRUCTION, not by re-tuning.

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump the executed physical plan of named queries — plan-audit
   * tooling (not part of the engine). Usage:
   * runMain graft.tools.PlanDump <sfDir> <name>[,<name>...] [<outDir> <suffix>]
@@ -15,13 +13,7 @@ object PlanDump {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val out = if (args.length >= 4) Some((args(2), args(3))) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-plandump")
     try names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)
       out match {

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.ext.{Dedup, Graph, Multimodal, Profile, Relevance, Sampling, Similarity, Sketches, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Volume tripwire for the LSH/ANN family (VERDICT r2 #6): blow the
@@ -342,16 +342,7 @@ object VolumeTripwire {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("volume-tripwire")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("volume-tripwire")
     spark.range(100000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
     def timeMin(df: => DataFrame): Double =

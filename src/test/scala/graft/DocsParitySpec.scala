@@ -149,4 +149,14 @@ class DocsParitySpec extends AnyFunSuite {
       s"skew receipt rows committed NOT ok (flood detonated or " +
         s"undocumented error): ${notOk.keys.toSeq.sorted.mkString(", ")}")
   }
+
+  test("SPARK_GRAFT_QUERIES selection names every unregistered query and sorts the rest") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("q1_catalog_scan, no_such_query,x7_typo")))
+    assert(e.getMessage.contains("no_such_query, x7_typo"), e.getMessage)
+    assert(!e.getMessage.contains("q1_catalog_scan"), e.getMessage)
+    assert(SparkEntry.selected(Some("x7_dedup_minhash,q1_catalog_scan,")).map(_._1) ==
+      Seq("q1_catalog_scan", "x7_dedup_minhash"))
+    assert(SparkEntry.selected(None).map(_._1) == registered.toSeq.sorted)
+  }
 }
