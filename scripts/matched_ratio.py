@@ -10,7 +10,7 @@ hours apart on that box is a function of hypervisor weather, not the
 engine. This script measures BOTH sides back-to-back in one quiet
 window and writes a single receipt:
 
-  {engine: {suite_wall, effective_cores, contended, ...},
+  {engine: {suite_wall, cpu_s, cores, ...},
    oracle: {stripped_min, kept_min, ...},
    ratio_stripped, ratio_kept, timestamps}
 
@@ -20,8 +20,9 @@ model); the oracle side is scripts/oracle_wall.py's pinned protocol
 stripped-both-sides pairing (engine strips its terminal Verify sorts,
 the oracle strips its presentation-only terminal ORDER BYs) is the
 honest one; the kept pairing rides along for auditability. The bench's
-own effective_cores probes land in the receipt so a starved window is
-VISIBLE in the artifact instead of silently inflating the numerator.
+cpu_s (process CPU-seconds of its min-wall pass) and cores land in the
+receipt beside the suite wall: a starved window shows as a wall that
+grew while cpu_s did not.
 
 Usage:
   python3 scripts/matched_ratio.py <sfDir> <oracle_sql.json> <out.json>
@@ -96,11 +97,8 @@ def main(sf_dir, oracle_path, out_path):
             "headline": engine.get("headline"),
             "parallel": engine.get("parallel"),
             "qsum": engine.get("qsum"),
-            "contended": engine.get("contended"),
-            "effective_cores": engine.get("effective_cores"),
+            "cpu_s": engine.get("cpu_s"),
             "cores": engine.get("cores"),
-            "calib_ratio": engine.get("calib_ratio"),
-            "pass_spread": engine.get("pass_spread"),
             "warm_errors": engine.get("warm_errors"),
             "sort": engine.get("sort"),
             "started": engine.get("_started"),
@@ -126,8 +124,8 @@ def main(sf_dir, oracle_path, out_path):
         "suite_wall": suite_wall,
         "oracle_stripped": oracle_stripped["min_wall"],
         "ratio_stripped": receipt["ratio_stripped"],
-        "contended": engine.get("contended"),
-        "effective_cores": engine.get("effective_cores"),
+        "cpu_s": engine.get("cpu_s"),
+        "cores": engine.get("cores"),
         "receipt": out_path,
     }))
     return 0

@@ -118,7 +118,7 @@ def main():
         f" oracles (excluded: {', '.join(sorted(QUADRATIC))})",
         f"- bench (runs=1, x11 {'included' if args.full_bench else 'excluded'}):"
         f" total **{total:.1f} s** across {len(qmap)} queries,"
-        f" calibration {bench.get('calibration')}",
+        f" cpu_s {bench.get('cpu_s')}",
         f"- slowest 10: " + ", ".join(f"{k} {v:.1f}" for k, v in slowest),
         "",
         f"```\n{stdout_line}\n```",

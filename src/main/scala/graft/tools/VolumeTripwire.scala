@@ -340,6 +340,19 @@ object VolumeTripwire {
     "x259_chunk_dedup" ->
       "chunk grid is x36's (probed); the rest is two combinable cell-cardinality groupBys + one cell-level equi-join on the 16-byte hash - the x1 exact-dedup wire shape (probed)")
 
+  /** The rows `SPARK_GRAFT_TRIPWIRE` picks: a token matches a row when
+    * it equals the row's full name or its id before the first `_`
+    * (`x249` picks both x249 rows, `x7` never picks x70). No tokens
+    * picks every row; a token that matches no row throws, naming it. */
+  def select(rowNames: Seq[String], tokens: Seq[String]): Set[String] = {
+    val ts = tokens.map(_.trim).filter(_.nonEmpty).toSet
+    def matches(row: String, t: String) = row == t || row.takeWhile(_ != '_') == t
+    val unknown = ts.filterNot(t => rowNames.exists(matches(_, t)))
+    require(unknown.isEmpty, "SPARK_GRAFT_TRIPWIRE names no tripwire row: " +
+      unknown.toSeq.sorted.mkString(", "))
+    rowNames.filter(r => ts.isEmpty || ts.exists(matches(r, _))).toSet
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.Session.local("volume-tripwire")
@@ -373,8 +386,9 @@ object VolumeTripwire {
       blow(embs, "vec_id", 10, 1000000L), col("vec_id"), col("embedding"))
 
     /** Lazy row: the timed bodies run only if the row survives the
-      * SPARK_GRAFT_TRIPWIRE name filter — so a new batch's rows can be
-      * measured without re-paying the whole (30+ row) historical suite. */
+      * SPARK_GRAFT_TRIPWIRE selection ([[select]]) — so a new batch's
+      * rows can be measured without re-paying the whole (30+ row)
+      * historical suite. */
     class Res(val name: String, t1f: => Double, t10f: => Double) {
       lazy val t1: Double = t1f
       lazy val t10: Double = t10f
@@ -1812,10 +1826,9 @@ object VolumeTripwire {
         Res("x253_padWaste", timeMin(pw(docs)), timeMin(pw(d10)))
       })
 
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_TRIPWIRE")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = results.filter(r => only.forall(_.exists(r.name.contains)))
+    val chosen = select(results.map(_.name),
+      sys.env.get("SPARK_GRAFT_TRIPWIRE").toSeq.flatMap(_.split(",")))
+    val selected = results.filter(r => chosen.contains(r.name))
     selected.foreach { r =>
       println(f"PROF ${r.name}%-18s t1x=${r.t1}%6.2fs t10x=${r.t10}%6.2fs ratio=${r.ratio}%5.1f")
     }

@@ -6,14 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * tail window can truncate a round artifact (it already ate BENCH_r03
   * and BENCH_r07). Drives `Bench.composeStdoutLine` — a pure function —
   * with worst-case synthetic data over the REAL registered query set,
-  * so registry growth that would overflow the short-id tier fails HERE,
-  * in `sbt test`, not in the next round's driver capture. Also pins the
-  * contention label's BOTH failure shapes (round-17): a stale-high ref
-  * under uniform load must fire, and a thin single-artifact history on
-  * a verifiably idle box must NOT fire. */
+  * so registry growth that would overflow the per-query tiers fails
+  * HERE, in `sbt test`, not in the next round's driver capture. */
 class BenchLineSpec extends AnyFunSuite {
 
-  private val calib = Seq(9.9999, 9.9999, 9.9999)
+  // worst-case widths for the measurement fields: two timed passes of a
+  // 10^4 s suite wall and a 10^5 CPU-s pass on a 128-core box
+  private val passes = Seq((9999.99, 99999.99), (9999.99, 99999.99))
 
   private def synth(names: Seq[String], wall: Double = 999.99)
       : Seq[(String, Seq[(Double, Double)], Option[String])] =
@@ -21,356 +20,78 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("full registry at worst-case walls keeps a per-query map inside the budget") {
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val line = Bench.composeStdoutLine(synth(names), "/root/testdata/sf0.1", 2, calib)
+    val line = Bench.composeStdoutLine(synth(names), "/root/testdata/sf0.1", 2,
+      passes = passes, cores = 128)
     assert(line.length <= Bench.StdoutBudget,
       s"bench stdout line is ${line.length} chars — the driver tail window " +
         s"(~2,000) will truncate it; shrink a tier or redesign before the " +
         s"next round artifact degrades")
     // ...and it must still be a PER-QUERY tier: if this fires, the
-    // registry outgrew the short-id tier and per-query walls would
-    // silently vanish from the round artifact (the BENCH_r08 failure)
+    // registry outgrew the slowest-first map tier and per-query walls
+    // would silently vanish from the round artifact (the BENCH_r08 failure)
     assert(!line.contains("\"queries\":\"bench.json\""),
       s"registry (${names.size} queries) no longer fits any per-query " +
         s"tier — add a denser tier before the driver record degrades")
   }
 
-  test("full registry in PARALLEL mode (qsum + pass_spread fields) still fits the budget") {
+  test("full registry in PARALLEL mode (qsum + cpu_s fields) still fits the budget") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val line = Bench.composeStdoutLine(synth(names), "/root/testdata/sf0.1", 2,
-      calib, Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 8, warmErrors = 0, suiteWalls = Seq(9999.99, 9999.99))
+      parallel = 8, warmErrors = names.size, passes = passes, cores = 128)
     assert(line.length <= Bench.StdoutBudget, s"len=${line.length}")
     assert(!line.contains("\"queries\":\"bench.json\""), line.take(300))
   }
 
-  // a genuinely quiet box: probes at the committed ref, flat
-  private val quietCalib = Seq(0.21, 0.22, 0.20)
-
-  test("contended self-label, SPREAD shape: a single query's warm run 3x its min fires the label") {
-    // two quiet queries + one whose second run was 5x the first
+  test("the line carries cpu_s and cores in both modes; serial keeps the per-query cpu map; no removed key appears") {
     val res = Seq(
-      ("x1_quiet", Seq((1.0, 1.0), (1.1, 1.1)), Option.empty[String]),
-      ("x2_quiet", Seq((2.0, 2.0), (2.2, 2.2)), Option.empty[String]),
-      ("x3_noisy", Seq((1.0, 1.0), (5.5, 1.1)), Option.empty[String]))
-    assert(Bench.contendedCount(res) == "1")
-    // a slow FIRST run is JIT/codegen warmup, not contention: the warm
-    // run is the min, so the query must NOT count (the quiet-box
-    // false-positive the round-13 review caught)
-    val jit = Seq(("x4_cold", Seq((4.8, 1.0), (0.97, 1.0)), Option.empty[String]))
-    assert(Bench.contendedCount(jit) == "0")
-    val line = Bench.composeStdoutLine(res, "sf", 2, quietCalib)
-    assert(line.contains("\"contended\":true"), line)
-    assert(line.contains("\"contended_spread\":1"), line)
-    // runs=1 -> spread undefined -> null count; the quiet calibration
-    // still measures, so the LABEL reads false, never a bogus null
-    val single = res.map { case (n, ts, e) => (n, ts.take(1), e) }
-    assert(Bench.contendedCount(single) == "null")
-    val singleLine = Bench.composeStdoutLine(single, "sf", 1, quietCalib)
-    assert(singleLine.contains("\"contended\":false"), singleLine)
-    assert(singleLine.contains("\"contended_spread\":null"), singleLine)
-    // NO measurable trigger at all -> label null
-    assert(Bench.composeStdoutLine(single, "sf", 1, Seq.empty)
-      .contains("\"contended\":null"))
-    // the fields survive tier degradation: full registry at worst-case
-    // walls lands in a compact tier and must still carry the label
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val big = names.map(n => (n, Seq((999.99, 999.99), (3333.3, 999.99)), Option.empty[String]))
-    val bigLine = Bench.composeStdoutLine(big, "sf", 2, quietCalib)
-    assert(bigLine.contains("\"contended\":true"), bigLine.take(300))
-    assert(bigLine.contains(s"\"contended_spread\":${names.size}"), bigLine.take(300))
-    assert(bigLine.length <= Bench.StdoutBudget)
-  }
-
-  test("contended self-label, UNIFORM shape: the r14-shaped calibration fires the label with zero spread") {
-    // BENCH_r14's exact failure: every query uniformly ~1.5-2x slower
-    // (no per-query spread), calibration [0.213, 0.431, 0.345] — the
-    // old count-only label shipped contended:0 against a 220.3 s quiet
-    // anchor. Both the absolute ratio (median 0.345/0.21 = 1.64 > 1.3)
-    // and the intra-run drift (0.431/0.213 = 2.02 > 1.5) must fire.
-    val r14Calib = Seq(0.213, 0.431, 0.345)
-    assert(Bench.calibRatio(r14Calib, 0.21) > 1.3)
-    assert(Bench.calibDrift(r14Calib) > 1.5)
-    val quiet = Seq(
-      ("x1_q", Seq((1.0, 1.0), (1.05, 1.0)), Option.empty[String]),
-      ("x2_q", Seq((2.0, 2.0), (2.1, 2.0)), Option.empty[String]))
-    val line = Bench.composeStdoutLine(quiet, "sf", 2, r14Calib)
-    assert(line.contains("\"contended\":true"), line)
-    assert(line.contains("\"contended_spread\":0"), line)
-    assert(line.contains("\"calib_ratio\":1.64"), line)
-    // UNIFORM-ONLY variant (no drift): all three probes equally 2x the
-    // quiet ref — only the absolute-ratio trigger can catch this
-    val flatLoaded = Seq(0.42, 0.43, 0.41)
-    assert(Bench.calibDrift(flatLoaded) <= 1.5)
-    val line2 = Bench.composeStdoutLine(quiet, "sf", 2, flatLoaded)
-    assert(line2.contains("\"contended\":true"), line2)
-    // the r13-shaped quiet artifact must NOT fire any trigger
-    val r13Calib = Seq(0.213, 0.230, 0.200)
-    val line3 = Bench.composeStdoutLine(quiet, "sf", 2, r13Calib)
-    assert(line3.contains("\"contended\":false"), line3)
-    assert(line3.contains("\"calib_quiet_ref\":0.21"), line3)
-    // drift is DIRECTIONAL: probes getting FASTER over the run (deeper
-    // JIT / quieter GC — observed live on a quiet targeted run) must
-    // not fire even though max/min is 1.69
-    val speedup = Seq(0.2115, 0.1677, 0.1252)
-    assert(Bench.calibDrift(speedup) < 1.0)
-    assert(Bench.composeStdoutLine(quiet, "sf", 2, speedup)
-      .contains("\"contended\":false"))
-    // START-LOADED shape (round-15 review find): load present at suite
-    // start that departs mid-run — median reads quiet (0.130/0.21 =
-    // 0.62), drift reads later-FASTER (benign direction) — only the
-    // worst-probe trigger can see the 0.388 start probe's 1.85x
-    val startLoaded = Seq(0.388, 0.112, 0.130)
-    assert(Bench.calibRatio(startLoaded, 0.21) <= 1.3)
-    assert(Bench.calibDrift(startLoaded) <= 1.5)
-    assert(Bench.calibWorst(startLoaded, 0.21) > 1.5)
-    assert(Bench.composeStdoutLine(quiet, "sf", 2, startLoaded)
-      .contains("\"contended\":true"))
-    // ...while the worst QUIET start probe ever observed (0.247 on the
-    // r15 sf1 targeted run) stays under the 1.5 threshold
-    assert(Bench.calibWorst(Seq(0.2473, 0.1076, 0.1008), 0.21) <= 1.5)
-  }
-
-  test("PARALLEL mode: pass-wall spread adjudicates, per-query spread does not, and the mode is declared") {
-    // per-query spread is noisy BY DESIGN under the pool: a 0.1 s query
-    // co-scheduled beside a 5 s query in pass 1 but not pass 2 spreads
-    // >3x on a perfectly quiet box — it must NOT fire in parallel mode
-    val coRunNoise = Seq(
-      ("x1_tiny", Seq((0.45, -1.0), (0.10, -1.0)), Option.empty[String]),
-      ("x2_big", Seq((5.0, -1.0), (5.1, -1.0)), Option.empty[String]))
-    val quietPasses = Seq(30.0, 31.5)
-    val line = Bench.composeStdoutLine(coRunNoise, "sf", 2, quietCalib,
-      Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 8, warmErrors = 0, suiteWalls = quietPasses)
-    assert(line.contains("\"contended\":false"), line)
-    assert(line.contains("\"contended_spread\":null"), line)
-    assert(line.contains("\"pass_spread\":1.05"), line)
-    assert(line.contains("\"parallel\":8"), line)
-    // headline value = min SUITE wall, with the per-query sum declared
-    // beside it (upper bound on the serial total; co-run walls overlap)
-    assert(line.contains("\"value\":30.0000"), line)
-    assert(line.contains("\"qsum\":5.1"), line)
-    // a non-first pass 1.3x the min pass wall = load arrived mid-run
-    val loadedPasses = Seq(30.0, 45.0)
-    assert(Bench.passSpread(loadedPasses) === 1.5)
-    val line2 = Bench.composeStdoutLine(coRunNoise, "sf", 2, quietCalib,
-      Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 8, warmErrors = 0, suiteWalls = loadedPasses)
-    assert(line2.contains("\"contended\":true"), line2)
-    // a slow FIRST pass is residual JIT debt, not contention (same
-    // directionality as the serial trigger)
-    assert(Bench.passSpread(Seq(45.0, 30.0)) === 1.0)
-    // single pass: spread unmeasurable -> null, calibration still labels
-    assert(Bench.passSpread(Seq(30.0)).isNaN)
-    val line3 = Bench.composeStdoutLine(coRunNoise, "sf", 1, quietCalib,
-      Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 8, warmErrors = 0, suiteWalls = Seq(30.0))
-    assert(line3.contains("\"contended\":false"), line3)
-    assert(line3.contains("\"pass_spread\":null"), line3)
-    // serial mode is unchanged: value = sum of per-query mins, no qsum
-    // field — and each mode DECLARES which quantity "value" is
-    // (round-18 advisor: the ~4x mode change must not be silently
-    // diffable across rounds)
-    assert(line.contains("\"headline\":\"suite_wall\""), line)
-    val serial = Bench.composeStdoutLine(coRunNoise, "sf", 2, quietCalib)
+      ("x1_tiny", Seq((0.45, 0.9), (0.10, 0.3)), Option.empty[String]),
+      ("x2_big", Seq((5.0, 12.0), (5.1, 13.0)), Option.empty[String]))
+    val serial = Bench.composeStdoutLine(res, "sf", 2,
+      passes = Seq((5.6, 14.0), (5.2, 13.5)), cores = 4)
+    // serial: value = sum of per-query mins, declared as such, no qsum
+    // field; the cpu map is the min-wall run's CPU
     assert(serial.contains("\"parallel\":1"), serial)
     assert(serial.contains("\"value\":5.1000"), serial)
-    assert(!serial.contains("\"qsum\":"), serial)
     assert(serial.contains("\"headline\":\"qsum\""), serial)
-  }
-
-  test("EFFECTIVE-CORES trigger: parallel-throughput starvation fires even when every single-thread probe is flat") {
-    // the round-17 failure shape, measured by the judge mid-round: the
-    // box delivers ~15 of 32 cores of parallel throughput (quiet-labeled
-    // pooled walls spanned 44.2-186.8 s at one HEAD) while the
-    // single-thread calibration probe sits dead in the quiet band — no
-    // pre-r18 trigger can fire
-    val quiet = Seq(
-      ("x1_q", Seq((1.0, -1.0), (1.0, -1.0)), Option.empty[String]),
-      ("x2_q", Seq((2.0, -1.0), (2.0, -1.0)), Option.empty[String]))
-    val starved = Seq(14.8, 15.2, 15.0)
-    assert(Bench.effCoresLow(starved, 32) === Some(true))
-    val line = Bench.composeStdoutLine(quiet, "sf", 2, quietCalib,
-      Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 8, warmErrors = 0, suiteWalls = Seq(30.0, 31.0),
-      effCores = starved, nCores = 32)
-    assert(line.contains("\"contended\":true"), line)
-    assert(line.contains("\"effective_cores\":[14.8,15.2,15.0]"), line)
-    assert(line.contains("\"cores\":32"), line)
-    // a healthy box reads near the advertised core count (pool packing
-    // and job overhead keep quiet readings in the 0.8-1.0x band) and
-    // stays quiet
-    val healthy = Seq(29.5, 31.0, 30.2)
-    assert(Bench.effCoresLow(healthy, 32) === Some(false))
-    val line2 = Bench.composeStdoutLine(quiet, "sf", 2, quietCalib,
-      Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 8, warmErrors = 0, suiteWalls = Seq(30.0, 31.0),
-      effCores = healthy, nCores = 32)
-    assert(line2.contains("\"contended\":false"), line2)
-    // near the floor (0.7 x 32 = 22.4): just below fires, just above not
-    assert(Bench.effCoresLow(Seq(21.9, 22.0, 22.1), 32) === Some(true))
-    assert(Bench.effCoresLow(Seq(22.9, 23.0, 23.1), 32) === Some(false))
-    // unmeasured probes contribute NO trigger and NO field (absent
-    // means not-measured, never measured-and-clear)
-    assert(Bench.effCoresLow(Nil, 32) === None)
-    assert(Bench.effCoresLow(starved, 0) === None)
-    val line3 = Bench.composeStdoutLine(quiet, "sf", 2, quietCalib,
-      Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 8, warmErrors = 0, suiteWalls = Seq(30.0, 31.0))
-    assert(line3.contains("\"contended\":false"), line3)
-    assert(!line3.contains("effective_cores"), line3)
-    // the trigger also adjudicates SERIAL runs (a starved box inflates
-    // wide stages there too; the serial receipt should say so)
-    val serialStarved = Bench.composeStdoutLine(quiet, "sf", 2, quietCalib,
-      Bench.CalibRef(), effCores = starved, nCores = 32)
-    assert(serialStarved.contains("\"contended\":true"), serialStarved)
-  }
-
-  // a synthetic round artifact in the driver's wrapping (escaped "tail"
-  // copies don't match the parser's plain-quote regexes — only the
-  // parsed section does)
-  private def artifact(contended: String, calib: String): String =
-    s"""{"n": 272, "parsed": {"metric": "total", "contended": $contended,
-       | "calibration": $calib, "value": 250.0}}""".stripMargin
-
-  test("quiet-ref re-anchor engages only at >=3 quiet medians; thin history falls back LOUDLY") {
-    // the round-16 regression, judge-measured: with ONE quiet artifact
-    // (r15, median 0.144) anchoring a 1.3x trigger, a verifiably idle
-    // box probing the historical 0.18-0.26 band self-labeled contended
-    // (ratio 1.33) — fail-closed is cry-wolf. One or two quiet medians
-    // must fall back to the committed ref and say so via `thin`.
-    val one = Seq(artifact("false", "[0.144, 0.1146, 0.1651]"))
-    val r1 = Bench.quietRefFromArtifacts(one)
-    assert(r1.ref === 0.21 && r1.src === "fallback" && r1.thin)
-    // the judge's actual idle-box probes against the thin-history ref:
-    // every trigger must read quiet
-    val idleProbes = Seq(0.181, 0.191, 0.256)
-    assert(Bench.calibRatio(idleProbes, r1.ref) <= 1.3 * r1.band)
-    assert(Bench.calibWorst(idleProbes, r1.ref) <= 1.5 * r1.band)
-    val quiet = Seq(("x1_q", Seq((1.0, 1.0), (1.0, 1.0)), Option.empty[String]))
-    val thinLine = Bench.composeStdoutLine(quiet, "sf", 2, idleProbes, r1)
-    assert(thinLine.contains("\"contended\":false"), thinLine)
-    assert(thinLine.contains("\"calib_ref_thin\":true"), thinLine)
-    // three quiet artifacts engage the history path: ref = min median,
-    // band = observed dispersion (max/min median). Old NUMERIC-label
-    // artifacts (round 18 backfill): a "contended": 0 round counts as
-    // quiet ONLY when its own calibration median sits inside the
-    // fallback quiet band — r13's 0.213 backfills (median ≤ 1.3×0.21),
-    // r14's uniformly-loaded 0.345 must NOT (spread-count 0 was blind
-    // to uniform load; its median is the evidence against it)
-    val three = Seq(
-      artifact("0", "[0.213, 0.430, 0.345]"),          // r14-shaped: numeric 0 but loaded -> skip
-      artifact("true", "[0.05, 0.05, 0.05]"),          // loaded: skip
-      artifact("false", "[0.144, 0.1146, 0.1651]"),    // r15 quiet (median 0.144)
-      artifact("false", "[0.21, 0.21, 0.21]"),         // r13-shaped quiet
-      artifact("false", "[0.19, 0.19, 0.19]"))         // idle-band quiet
-    val r3 = Bench.quietRefFromArtifacts(three)
-    assert(r3.ref === 0.144 && r3.src === "hist(3)" && !r3.thin)
-    assert(math.abs(r3.band - 0.21 / 0.144) < 1e-9)
-    // the backfill arm itself: a numeric-0 round with an in-band median
-    // joins the history (this is what lets r13+r15+r17 reach hist(3)
-    // at the r18 run, instead of waiting two more rounds)
-    val backfill = Seq(
-      artifact("0", "[0.213, 0.230, 0.200]"),          // r13: numeric 0, median 0.213 -> quiet
-      artifact("0", "[0.213, 0.430, 0.345]"),          // r14: numeric 0, median 0.345 -> loaded
-      artifact("false", "[0.144, 0.1146, 0.1651]"),    // r15
-      artifact("false", "[0.1856, 0.2263, 0.1517]"))   // r17
-    val rb = Bench.quietRefFromArtifacts(backfill)
-    assert(rb.ref === 0.144 && rb.src === "hist(3)" && !rb.thin, rb.toString)
-    assert(math.abs(rb.band - 0.213 / 0.144) < 1e-9, rb.toString)
-    // the idle box under the engaged history: median 0.191/0.144 = 1.33
-    // is INSIDE the widened band (1.3 x 1.458 = 1.9) -> quiet
-    val histLine = Bench.composeStdoutLine(quiet, "sf", 2, idleProbes, r3)
-    assert(histLine.contains("\"contended\":false"), histLine)
-    assert(histLine.contains("\"calib_band\":1.46"), histLine)
-    assert(!histLine.contains("calib_ref_thin"), histLine)
-    // ...while a genuinely loaded box (2.1x the ref, beyond the band's
-    // 1.9x allowance) still fires — the band widens, it doesn't blind
-    val loadedProbes = Seq(0.30, 0.31, 0.30)
-    val loadedLine = Bench.composeStdoutLine(quiet, "sf", 2, loadedProbes, r3)
-    assert(loadedLine.contains("\"contended\":true"), loadedLine)
-    // no parseable quiet artifact -> committed fallback, not thin
-    val r0 = Bench.quietRefFromArtifacts(Seq(artifact("true", "[0.1]")))
-    assert(r0.ref === 0.21 && r0.src === "fallback" && !r0.thin)
-    assert(Bench.quietRefFromArtifacts(Seq.empty).ref === 0.21)
-    // quiet artifacts can only LOWER the ref, never raise it past the
-    // fallback; the band is capped at 3 so one slow-but-quiet round
-    // can't widen the trigger into uselessness
-    val high = Seq.fill(3)(artifact("false", "[0.9, 0.9, 0.9]"))
-    val rh = Bench.quietRefFromArtifacts(high)
-    assert(rh.ref === 0.21 && rh.band === 3.0)
-    // rolling window: only the most recent K quiet medians participate
-    // medians 0.01..0.08 ascending: the window keeps the LAST 5
-    // (0.04..0.08), so the min is 0.04 — the early 0.01 aged out
-    val many = (1 to 8).map(i => artifact("false", s"[0.0$i, 0.0$i, 0.0$i]"))
-    val rMany = Bench.quietRefFromArtifacts(many, lastK = 5)
-    assert(rMany.ref === 0.04 && rMany.src === "hist(5)")
-  }
-
-  test("re-anchored ref still closes the round-15 fail-open gap once history is thick enough") {
-    // true quiet probes ~0.12-0.14 (three committed quiet rounds); a box
-    // uniformly ~1.8x loaded probes ~0.25 — under the stale 0.21
-    // fallback every trigger read quiet (the round-15 verdict's shape)...
-    val loaded = Seq(0.25, 0.26, 0.25)
-    assert(Bench.calibRatio(loaded, 0.21) <= 1.3)
-    assert(Bench.calibWorst(loaded, 0.21) <= 1.5)
-    // ...but against a 3-artifact history (ref 0.12, band 0.144/0.12 =
-    // 1.2 -> threshold 1.56) the uniform trigger fires (0.25/0.12 = 2.08)
-    val hist = Bench.quietRefFromArtifacts(Seq(
-      artifact("false", "[0.12, 0.12, 0.12]"),
-      artifact("false", "[0.13, 0.13, 0.13]"),
-      artifact("false", "[0.144, 0.144, 0.144]")))
-    assert(hist.ref === 0.12 && hist.src === "hist(3)")
-    assert(Bench.calibRatio(loaded, hist.ref) > 1.3 * hist.band)
-    val quiet = Seq(("x1_q", Seq((1.0, 1.0), (1.0, 1.0)), Option.empty[String]))
-    val line = Bench.composeStdoutLine(quiet, "sf", 2, loaded, hist)
-    assert(line.contains("\"contended\":true"), line)
-    assert(line.contains("\"calib_ref_src\":\"hist(3)\""), line)
-  }
-
-  test("stale-LOW arm (ref-raise path): >=3 trailing contended artifacts raise the loud marker") {
-    // a label that fires every round has stopped adjudicating — the
-    // advisor's one-way-ratchet find: contended rounds never refill the
-    // quiet history, so a ratcheted-low ref locks in forever unless the
-    // artifact itself says "ref possibly stale-low"
-    val arts = Seq(
-      artifact("false", "[0.12, 0.12, 0.12]"),
-      artifact("false", "[0.13, 0.13, 0.13]"),
-      artifact("false", "[0.14, 0.14, 0.14]"),
-      artifact("true", "[0.2, 0.2, 0.2]"),
-      artifact("true", "[0.21, 0.21, 0.21]"),
-      artifact("true", "[0.19, 0.19, 0.19]"))
-    val r = Bench.quietRefFromArtifacts(arts)
-    assert(r.staleLow)
-    val quiet = Seq(("x1_q", Seq((1.0, 1.0), (1.0, 1.0)), Option.empty[String]))
-    val line = Bench.composeStdoutLine(quiet, "sf", 2, Seq(0.12, 0.12, 0.12), r)
-    assert(line.contains("\"calib_ref_stale_low\":true"), line)
-    // a quiet round anywhere in the trailing window clears the streak
-    val cleared = arts :+ artifact("false", "[0.12, 0.12, 0.12]")
-    assert(!Bench.quietRefFromArtifacts(cleared).staleLow)
-    // two trailing contended rounds are normal life, not a stale ref
-    assert(!Bench.quietRefFromArtifacts(arts.take(5)).staleLow)
-  }
-
-  test("ref-stale-HIGH arm: probes far below the ref raise the loud marker without mislabeling a quiet run") {
-    val probes = Seq(0.08, 0.082, 0.079) // median 0.08 vs ref 0.144 = 0.56
-    assert(Bench.calibRefStale(probes, 0.144))
-    assert(!Bench.calibRefStale(Seq(0.12, 0.13, 0.12), 0.144))
-    val quiet = Seq(("x1_q", Seq((1.0, 1.0), (1.0, 1.0)), Option.empty[String]))
-    val ref = Bench.CalibRef(0.144, 1.0, "hist(3)")
-    val line = Bench.composeStdoutLine(quiet, "sf", 2, probes, ref)
-    assert(line.contains("\"calib_ref_stale\":true"), line)
-    assert(line.contains("\"contended\":false"), line) // stale != loaded
-    // not stale -> the key is absent (stdout budget)
-    val line2 = Bench.composeStdoutLine(quiet, "sf", 2,
-      Seq(0.14, 0.14, 0.14), ref)
-    assert(!line2.contains("calib_ref_stale"), line2)
+    assert(!serial.contains("\"qsum\":"), serial)
+    assert(serial.contains("\"cpu\":{\"x1_tiny\":0.30,\"x2_big\":12.00}"), serial)
+    // cpu_s is the process CPU of the min-WALL pass, not the min CPU
+    assert(serial.contains("\"cpu_s\":13.50"), serial)
+    assert(serial.contains("\"cores\":4"), serial)
+    // pooled: per-query cpu is unmeasured (null), the headline is the
+    // min suite wall with the per-query sum beside it
+    val pooledRes = res.map { case (n, ts, e) => (n, ts.map(t => (t._1, -1.0)), e) }
+    val pooled = Bench.composeStdoutLine(pooledRes, "sf", 2, parallel = 8,
+      passes = Seq((3.1, 20.0), (3.0, 19.0)), cores = 32)
+    assert(pooled.contains("\"parallel\":8"), pooled)
+    assert(pooled.contains("\"value\":3.0000"), pooled)
+    assert(pooled.contains("\"qsum\":5.10,\"headline\":\"suite_wall\""), pooled)
+    assert(pooled.contains("\"cpu\":{\"x1_tiny\":null,\"x2_big\":null}"), pooled)
+    assert(pooled.contains("\"cpu_s\":19.00"), pooled)
+    assert(pooled.contains("\"cores\":32"), pooled)
+    // a JVM without a process CPU clock reports null, never a number
+    val noClock = Bench.composeStdoutLine(pooledRes, "sf", 1, parallel = 8,
+      passes = Seq((3.0, -1.0)), cores = 32)
+    assert(noClock.contains("\"cpu_s\":null"), noClock)
+    // the retired weather labels and probes stay out of every tier
+    // (key prefixes: "calib covers calibration and every calib_* field)
+    val removed = Seq("contended", "pass_spread", "calib", "effective_cores")
+      .map("\"" + _)
+    val big = Bench.composeStdoutLine(synth(SparkEntry.queries.keys.toSeq.sorted),
+      "sf", 2, parallel = 8, passes = passes, cores = 128)
+    val floor = Bench.composeStdoutLine(
+      res.map { case (n, _, _) => (n, Nil, Some("boom " * 400)) } ++
+        (1 to 300).map(i => (s"x${i}_broken", Nil, Some("boom " * 100))), "sf", 2)
+    assert(floor.contains("\"n_failed\":302"), floor)
+    for (line <- Seq(serial, pooled, big, floor)) {
+      assert(line.contains("\"cpu_s\":") && line.contains("\"cores\":"), line.take(300))
+      removed.foreach(k => assert(!line.contains(k), s"$k in ${line.take(300)}"))
+    }
   }
 
   test("warm_runs, warm_errors, sort and parallel are declared in the line (methodology is never hidden)") {
     val quiet = Seq(("x1_q", Seq((1.0, 1.0), (1.0, 1.0)), Option.empty[String]))
-    val line = Bench.composeStdoutLine(quiet, "sf", 2, quietCalib,
-      Bench.CalibRef(), warmRuns = 1, sortLabel = "stripped",
-      parallel = 1, warmErrors = 2)
+    val line = Bench.composeStdoutLine(quiet, "sf", 2, warmErrors = 2)
     assert(line.contains("\"warm_runs\":1"), line)
     assert(line.contains("\"sort\":\"stripped\""), line)
     // a query whose warm pass silently died cannot present a half-cold
@@ -412,7 +133,7 @@ class BenchLineSpec extends AnyFunSuite {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val broken = names.map(n =>
       (n, Seq.empty[(Double, Double)], Some("boom " * 100)))
-    val line = Bench.composeStdoutLine(broken, "/root/testdata/sf0.1", 2, calib)
+    val line = Bench.composeStdoutLine(broken, "/root/testdata/sf0.1", 2)
     assert(line.length <= Bench.StdoutBudget, s"len=${line.length}")
     assert(line.contains("\"metric\":\"total\""))
     assert(line.contains(s"\"n_failed\":${names.size}"))
@@ -426,7 +147,7 @@ class BenchLineSpec extends AnyFunSuite {
     // reads — never the round-17/18 compact string (PERF_r18 came back
     // empty against the string form: prev_bench_ok=false, n_common=0)
     val names = (1 to 138).map(i => s"x${i}_synthetic_query_name")
-    val line = Bench.composeStdoutLine(synth(names), "/root/testdata/sf0.1", 2, calib)
+    val line = Bench.composeStdoutLine(synth(names), "/root/testdata/sf0.1", 2)
     assert(line.length <= Bench.StdoutBudget)
     assert(!line.contains("queries_fmt"), line.take(200))
     assert(line.contains("\"queries\":{"), line.take(200))
@@ -445,7 +166,7 @@ class BenchLineSpec extends AnyFunSuite {
     val res = names.zipWithIndex.map { case (n, i) =>
       (n, Seq(((i + 1).toDouble, (i + 1).toDouble)), Option.empty[String])
     }
-    val line = Bench.composeStdoutLine(res, "/root/testdata/sf0.1", 2, calib)
+    val line = Bench.composeStdoutLine(res, "/root/testdata/sf0.1", 2)
     assert(line.length <= Bench.StdoutBudget, s"len=${line.length}")
     assert(!line.contains("\"queries\":\"bench.json\""), line)
     assert(line.contains("\"x250\":250"), line)  // the slowest wall is present
@@ -459,7 +180,7 @@ class BenchLineSpec extends AnyFunSuite {
     // to FULL names inside the same bounded map tier — still parseable,
     // no totals-only cliff
     val clash = (1 to 250).map(i => s"x1_clash_$i")
-    val line2 = Bench.composeStdoutLine(synth(clash), "/root/testdata/sf0.1", 2, calib)
+    val line2 = Bench.composeStdoutLine(synth(clash), "/root/testdata/sf0.1", 2)
     assert(line2.length <= Bench.StdoutBudget)
     assert(line2.contains("\"queries\":{\"x1_clash_"), line2.take(400))
     assert(line2.contains("\"queries_rest\":"), line2.take(400))

@@ -159,4 +159,22 @@ class DocsParitySpec extends AnyFunSuite {
       Seq("q1_catalog_scan", "x7_dedup_minhash"))
     assert(SparkEntry.selected(None).map(_._1) == registered.toSeq.sorted)
   }
+
+  test("SPARK_GRAFT_TRIPWIRE selection is exact and names every token that matches no row") {
+    val rows = """Res\("(x\d+_\w+)"""".r
+      .findAllMatchIn(read("src/main/scala/graft/tools/VolumeTripwire.scala"))
+      .map(_.group(1)).toSeq
+    assert(rows.contains("x70_bpeRounds") && rows.contains("x79_winnowPairs"))
+    // an id picks its own rows only — x7 is not a prefix match for x70/x73/x79
+    assert(graft.tools.VolumeTripwire.select(rows, Seq("x7")) == Set("x7_minhashPairs"))
+    assert(graft.tools.VolumeTripwire.select(rows, Seq("x249")) ==
+      Set("x249_distMatch", "x249_fatBin"))
+    assert(graft.tools.VolumeTripwire.select(rows, Seq(" x249_fatBin", "x7")) ==
+      Set("x249_fatBin", "x7_minhashPairs"))
+    assert(graft.tools.VolumeTripwire.select(rows, Nil) == rows.toSet)
+    // x57 is exempt (no row), so selecting it must fail, not print TRIPWIRE OK
+    val e = intercept[IllegalArgumentException](
+      graft.tools.VolumeTripwire.select(rows, Seq("x7", "x57", "x7_typo")))
+    assert(e.getMessage.contains("x57, x7_typo"), e.getMessage)
+  }
 }
